@@ -361,8 +361,9 @@ object Analytics {
     *
     * Returns the capped frame MATERIALIZED ([[Materialize.round]]): it
     * feeds the probe and both self-join sides, so pinning it makes the
-    * probe one cheap aggregate instead of a third distinct-scan. */
-  /** Returns the admitted distinct (basket, item) frame plus, when the
+    * probe one cheap aggregate instead of a third distinct-scan.
+    *
+    * Returns the admitted distinct (basket, item) frame plus, when the
     * admission probe ran, the EXACT ordered-pair volume Σm² it measured —
     * the callers size their pair-aggregate partitioning from it
     * (guide §2.2: partitions from data volume, not a constant). */
@@ -536,16 +537,6 @@ object Analytics {
       .withColumn("filled", last(col(valCol), ignoreNulls = true).over(w))
   }
 
-  /** Per-group Pearson correlation + least-squares line, exact-sum style:
-    * the five moment sums (Σx, Σy, Σxy, Σx², Σy²) accumulate in
-    * DECIMAL(18,2)-derived decimals — order-independent and exact — and
-    * only the final closed-form combination runs in doubles, as one fixed
-    * expression per output (division and sqrt are correctly rounded IEEE
-    * ops, so the replay is bit-identical as long as every decimal sum
-    * stays under 2^53 when cast — true for quantity/discount-sized inputs
-    * at any realistic SF; pick small-magnitude columns, not prices).
-    * One partial+final aggregate, no second pass (vs the naive
-    * mean-centered two-pass formulation). */
   /** Chi-square test of independence over a contingency table: one row
     * per observed (rowCol, colCol) cell with the observed count, the
     * independence-expected count, the cell's chi² term, plus the total
@@ -681,6 +672,16 @@ object Analytics {
         count(col(valCol)).over(w).cast("double"))
   }
 
+  /** Per-group Pearson correlation + least-squares line, exact-sum style:
+    * the five moment sums (Σx, Σy, Σxy, Σx², Σy²) accumulate in
+    * DECIMAL(18,2)-derived decimals — order-independent and exact — and
+    * only the final closed-form combination runs in doubles, as one fixed
+    * expression per output (division and sqrt are correctly rounded IEEE
+    * ops, so the replay is bit-identical as long as every decimal sum
+    * stays under 2^53 when cast — true for quantity/discount-sized inputs
+    * at any realistic SF; pick small-magnitude columns, not prices).
+    * One partial+final aggregate, no second pass (vs the naive
+    * mean-centered two-pass formulation). */
   def linearFit(df: DataFrame, keyCol: String, xCol: String,
                 yCol: String): DataFrame = {
     def dec(c: Column) = c.cast("decimal(18,2)")
@@ -1663,23 +1664,6 @@ object Analytics {
     } finally vals.unpersist()
   }
 
-  /** Welch's two-sample t statistic per metric group — the unequal-variance
-    * A/B test report (the safe default; pooled-variance Student's t is
-    * wrong the moment the arms differ in spread or size).
-    *
-    * Moments are exact: per-arm n, Σv, Σv² as DECIMAL sums of a
-    * DECIMAL(18,2) value (squares at DECIMAL(38,4) cannot round below
-    * ~10^17 rows), so the only floating point is the final fixed program —
-    * mean = Σv/n, sample variance s² = (Σv² − Σv²/n)/(n−1), then
-    *   t  = (meanA − meanB) / sqrt(sA²/nA + sB²/nB)
-    *   df = (sA²/nA + sB²/nB)² / ((sA²/nA)²/(nA−1) + (sB²/nB)²/(nB−1))
-    * each written ONCE with fixed parenthesization (the az01 convention) so
-    * a SQL replay is bit-identical. Arms with n < 2 or zero combined
-    * variance yield NULL t (insufficient evidence ≠ infinite evidence).
-    *
-    * Plan: one partial+final aggregate per arm over the group key, one
-    * equi-join of two tiny per-group tables — scan-bound at any scale.
-    * Output: (`keyCol`, n_a, mean_a, n_b, mean_b, t_stat, welch_df). */
   /** Per-group Gini coefficient — the inequality/concentration measure
     * ("do 1 % of customers carry 90 % of revenue"): with the group's
     * values sorted ascending x₁ ≤ … ≤ x_n,
@@ -2106,6 +2090,23 @@ object Analytics {
             (lit(2.0) * sqrt(col("_var_")))).as("z_stat"))
   }
 
+  /** Welch's two-sample t statistic per metric group — the unequal-variance
+    * A/B test report (the safe default; pooled-variance Student's t is
+    * wrong the moment the arms differ in spread or size).
+    *
+    * Moments are exact: per-arm n, Σv, Σv² as DECIMAL sums of a
+    * DECIMAL(18,2) value (squares at DECIMAL(38,4) cannot round below
+    * ~10^17 rows), so the only floating point is the final fixed program —
+    * mean = Σv/n, sample variance s² = (Σv² − Σv²/n)/(n−1), then
+    *   t  = (meanA − meanB) / sqrt(sA²/nA + sB²/nB)
+    *   df = (sA²/nA + sB²/nB)² / ((sA²/nA)²/(nA−1) + (sB²/nB)²/(nB−1))
+    * each written ONCE with fixed parenthesization (the az01 convention) so
+    * a SQL replay is bit-identical. Arms with n < 2 or zero combined
+    * variance yield NULL t (insufficient evidence ≠ infinite evidence).
+    *
+    * Plan: one partial+final aggregate per arm over the group key, one
+    * equi-join of two tiny per-group tables — scan-bound at any scale.
+    * Output: (`keyCol`, n_a, mean_a, n_b, mean_b, t_stat, welch_df). */
   def welchTTest(df: DataFrame, keyCol: String, armCol: String,
                  valCol: String, armA: String, armB: String): DataFrame = {
     def moments(arm: String, sfx: String) = df

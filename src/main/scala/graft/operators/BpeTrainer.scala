@@ -183,22 +183,6 @@ object BpeTrainer {
       .groupBy(idCol).agg(sum(col("_np_").cast("long")).as("bpe_pieces"))
   }
 
-  /** The tokenizer HANDOFF: segment every word with the learned merges
-    * and map pieces to vocabulary ids — what a training loader actually
-    * consumes. Vocabulary layout is the classic BPE one: merge outputs
-    * take ids 0..M−1 in rank order, then the corpus' base symbols
-    * (single code points, binary-sorted) follow; a piece string produced
-    * by two different merges resolves to the smaller id; a piece outside
-    * the vocabulary (possible only on text the merges weren't trained
-    * on) maps to −1 rather than failing the batch.
-    *
-    * Scale note: segmentation here runs per word OCCURRENCE inside one
-    * UDF — order-preserving and plan-trivial. At corpus scale reuse
-    * [[segmentCounts]]'s distinct-word memoization with a positional
-    * explode/regroup (posexplode → dictionary join → collect_list over
-    * (word_pos, piece_pos)); the dictionary shortcut composes because
-    * segmentation is a pure per-word function.
-    * Output: (idCol, token_ids array<int>). */
   /** Broadcastable tokenizer state shared by [[tokenizeToIds]] and
     * [[tokenizeToIdsMemoized]]: merge rank maps + the fitted vocabulary.
     * Base symbols come from the same SQL charization train() uses, so
@@ -230,6 +214,22 @@ object BpeTrainer {
       vocab))
   }
 
+  /** The tokenizer HANDOFF: segment every word with the learned merges
+    * and map pieces to vocabulary ids — what a training loader actually
+    * consumes. Vocabulary layout is the classic BPE one: merge outputs
+    * take ids 0..M−1 in rank order, then the corpus' base symbols
+    * (single code points, binary-sorted) follow; a piece string produced
+    * by two different merges resolves to the smaller id; a piece outside
+    * the vocabulary (possible only on text the merges weren't trained
+    * on) maps to −1 rather than failing the batch.
+    *
+    * Scale note: segmentation here runs per word OCCURRENCE inside one
+    * UDF — order-preserving and plan-trivial. At corpus scale reuse
+    * [[segmentCounts]]'s distinct-word memoization with a positional
+    * explode/regroup (posexplode → dictionary join → collect_list over
+    * (word_pos, piece_pos)); the dictionary shortcut composes because
+    * segmentation is a pure per-word function.
+    * Output: (idCol, token_ids array<int>). */
   def tokenizeToIds(df: DataFrame, idCol: String, textCol: String,
                     merges: Seq[Merge]): DataFrame = {
     val ordered = merges.sortBy(_.rank)

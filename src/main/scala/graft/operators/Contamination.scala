@@ -47,18 +47,6 @@ object Contamination {
       .withColumn("contaminated", col("n_overlap") >= minOverlap)
   }
 
-  /** Exact-substring contamination: a training doc is flagged when any
-    * benchmark snippet appears VERBATIM inside it — the stricter
-    * companion to [[overlapReport]]'s n-gram measure (the form used for
-    * canary strings and verbatim answer leakage, where token-level
-    * overlap is too forgiving).
-    *
-    * Scale: snippets broadcast (benchmark-sized, tiny next to the
-    * corpus); the scan is one pass over training text. The per-row cost
-    * is |snippets| substring searches — at a real snippet count use
-    * [[exactContainsReportAC]] (one automaton pass per char, identical
-    * output); the declarative contains-join below IS the gated
-    * semantics. Output: (trainId, n_hits, contaminated). */
   /** Cross-document memorization-risk report: for each document, the
     * fraction of its distinct word n-grams that also appear in at least
     * one OTHER document — the span-level duplication signal that predicts
@@ -133,6 +121,18 @@ object Contamination {
         col("risk_permille"))
   }
 
+  /** Exact-substring contamination: a training doc is flagged when any
+    * benchmark snippet appears VERBATIM inside it — the stricter
+    * companion to [[overlapReport]]'s n-gram measure (the form used for
+    * canary strings and verbatim answer leakage, where token-level
+    * overlap is too forgiving).
+    *
+    * Scale: snippets broadcast (benchmark-sized, tiny next to the
+    * corpus); the scan is one pass over training text. The per-row cost
+    * is |snippets| substring searches — at a real snippet count use
+    * [[exactContainsReportAC]] (one automaton pass per char, identical
+    * output); the declarative contains-join below IS the gated
+    * semantics. Output: (trainId, n_hits, contaminated). */
   def exactContainsReport(train: DataFrame, trainId: String,
                           trainText: String, snippets: DataFrame,
                           snippetCol: String): DataFrame = {

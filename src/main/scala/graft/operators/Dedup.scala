@@ -264,6 +264,22 @@ object Dedup {
           .as("n_removed"))
   }
 
+  /** Incremental connected components: fold NEW pairs into an existing
+    * `(id, component)` labeling without revisiting historical pair
+    * generation — the daily-update path of a standing dedup corpus. The
+    * labeling is itself an edge set (each id → its component min) that
+    * exactly preserves prior connectivity, so CC over labels ∪ newPairs
+    * equals CC over the full historical pair set — the contract dd14
+    * gates against the full-rebuild oracle. Cost scales with
+    * |labels| + |delta|: one row per RETAINED doc plus the day's pairs,
+    * not the pair history — at 100 TB that is the difference between
+    * touching the corpus index and re-mining every pair ever seen. */
+  def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
+                            aCol: String, bCol: String): DataFrame =
+    connectedComponents(
+      labels.select(col("id").as(aCol), col("component").as(bCol))
+        .unionByName(newPairs.select(aCol, bCol)), aCol, bCol)
+
   /** Cluster near-duplicate PAIRS into connected components and elect one
     * representative per cluster — the step that turns dd03/dd05-style pair
     * lists into an actionable keep/drop set (pairs alone over-delete: A~B,
@@ -294,22 +310,6 @@ object Dedup {
     *
     * Output: (`idCol`, `component`) for every node that appears in `pairs`,
     * component = min node id reachable. */
-  /** Incremental connected components: fold NEW pairs into an existing
-    * `(id, component)` labeling without revisiting historical pair
-    * generation — the daily-update path of a standing dedup corpus. The
-    * labeling is itself an edge set (each id → its component min) that
-    * exactly preserves prior connectivity, so CC over labels ∪ newPairs
-    * equals CC over the full historical pair set — the contract dd14
-    * gates against the full-rebuild oracle. Cost scales with
-    * |labels| + |delta|: one row per RETAINED doc plus the day's pairs,
-    * not the pair history — at 100 TB that is the difference between
-    * touching the corpus index and re-mining every pair ever seen. */
-  def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
-                            aCol: String, bCol: String): DataFrame =
-    connectedComponents(
-      labels.select(col("id").as(aCol), col("component").as(bCol))
-        .unionByName(newPairs.select(aCol, bCol)), aCol, bCol)
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           driverThreshold: Long = 1L << 20): DataFrame = {
@@ -359,39 +359,25 @@ object Dedup {
       .distinct().repartition(col("_dst_")).persist()
     edges.count() // materialize off the upstream pin before dropping it
     p.unpersist()
-    var labels = edges.select(col("_src_").as("_id_"))
-      .distinct().withColumn("_lbl_", col("_id_")).materializeRound()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // every node starts as its own label; a null previous label counts
+    // every starting label as changed
+    val init = edges.select(col("_src_").as("_id_")).distinct()
+      .select(col("_id_"), col("_id_").as("_lbl_"), when(lit(false), col("_id_")).as("_old_"))
+    try Materialize.iterate("connectedComponents", init, maxIter,
+        Some(_ => !(col("_lbl_") <=> col("_old_")))) { (labels, _, _) =>
       // neighbor-min pass: labels flow across edges, then each node keeps
       // the min of (own, incoming); ids-and-labels-only shuffles. The own
       // branch is tagged so the SAME aggregate also yields the previous
-      // label — convergence detection without a per-round compare join.
+      // label — the changed-label halt count without a compare join.
       val incoming = edges.join(labels, edges("_dst_") === labels("_id_"))
         .select(col("_src_").as("_id_"), col("_lbl_"), lit(false).as("_own_"))
-      val nextPlan = labels.select(col("_id_"), col("_lbl_"), lit(true).as("_own_"))
+      labels.select(col("_id_"), col("_lbl_"), lit(true).as("_own_"))
         .union(incoming)
         .groupBy("_id_")
         .agg(min("_lbl_").as("_lbl_"),
           min(when(col("_own_"), col("_lbl_"))).as("_old_"))
-      // plan-audit hook (r20): the loop's physical plans are invisible to
-      // query-level explain (rounds execute eagerly inside the operator);
-      // this prints round 1's plan so the one-time-shuffle discipline is
-      // auditable (default off, no behavioral change)
-      if (iter == 0 && spark.conf.get("spark.graft.explainRounds", "false").toBoolean)
-        nextPlan.explain("formatted")
-      val next = nextPlan.materializeRound()
-      val changed = next.where(col("_lbl_") =!= col("_old_")).limit(1).count()
-      labels.unpersist()
-      labels = next.drop("_old_")
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist()
-    require(converged, s"connectedComponents: no fixpoint after $maxIter rounds " +
-      "(component diameter exceeds maxIter — raise it or pre-shrink with LSH)")
-    labels.select(col("_id_").as("id"), col("_lbl_").as("component"))
+    }.select(col("_id_").as("id"), col("_lbl_").as("component"))
+    finally edges.unpersist()
   }
 
   /** Star-contraction connected components — the alternating
@@ -418,77 +404,53 @@ object Dedup {
     *    m⁻(u) = min(Γ⁻(u) ∪ u) — flattens the local trees into stars.
     * Every emitted edge (x, m) has x > m, so the edge set stays in
     * canonical (hi, lo) orientation and self-loops never re-enter.
-    * Fixpoint = edge set unchanged over a full round (checked exactly:
-    * equal counts + empty anti-join, two ids-only jobs on a set that is
-    * SHRINKING toward one edge per non-min node); at fixpoint the edges
-    * are depth-1 stars rooted at component minima, so labels read off
-    * directly. Per-round [[Materialize.round]] truncates lineage, same
-    * discipline as [[connectedComponents]]. */
+    * Fixpoint = edge set unchanged over a full round: each round flags
+    * the edges a star moved (a large-star re-point from a node that also
+    * has a smaller neighbor, a small-star re-point of a non-min smaller
+    * neighbor), and a round that flags none leaves the edge set as it
+    * was — exactly the star forest rooted at component minima, so labels
+    * read off directly. The flag count rides each round's pin through
+    * [[Materialize.iterate]]; the star-forest check after the loop is an
+    * exact job. */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
                               maxIter: Int = 30): DataFrame = {
-    // one materialization of a possibly-expensive upstream feeds both the
-    // node set and the initial edge set (same discipline as
-    // connectedComponents' persist)
-    val p = pairs.persist()
-    val nodes = p.select(col(aCol).as("id"))
-      .union(p.select(col(bCol))).distinct().materializeRound()
-    // canonical orientation: (hi, lo), self-loops dropped
-    var edges = p
-      .select(greatest(col(aCol), col(bCol)).as("_hi_"),
-        least(col(aCol), col(bCol)).as("_lo_"))
-      .where(col("_hi_") =!= col("_lo_"))
-      .distinct().materializeRound()
-    var nE = edges.count()
-    p.unpersist()
-    var converged = nE == 0
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // canonical orientation (hi, lo), pinned once so a possibly-expensive
+    // upstream runs once; self-pairs stay here for the node set only
+    val canon = pairs.select(greatest(col(aCol), col(bCol)).as("_hi_"),
+      least(col(aCol), col(bCol)).as("_lo_")).distinct().materializeRound()
+    val init = canon.where(col("_hi_") =!= col("_lo_")).withColumn("_chg_", lit(true))
+    // _chg_ marks an edge some star moved this round: none moved means
+    // the previous edge set was already the fixpoint
+    var large = Option.empty[DataFrame] // the last round's cached large-star
+    val edges = try Materialize.iterate("connectedComponentsStar", init,
+        maxIter, Some(_ => col("_chg_"))) { (edges, _, _) =>
+      large.foreach(_.unpersist()) // the round that read it is pinned
       // large-star: m(u) = least(min Γ(u), u) over the FULL neighborhood
       // (symmetric view); strictly-larger neighbors re-point to m
       val sym = edges.select(col("_hi_").as("_u_"), col("_lo_").as("_v_"))
         .union(edges.select(col("_lo_"), col("_hi_")))
       val mins = sym.groupBy("_u_").agg(min(col("_v_")).as("_mn_"))
         .select(col("_u_"), least(col("_mn_"), col("_u_")).as("_m_"))
-      // r20 (verdict item 3): lazy persist instead of an eager per-round
-      // materialization — afterLarge has two consumers (the min aggregate
-      // and the re-point join) but the small-star job materializes it as a
-      // side effect, so the eager pin was one extra full job per round.
-      // Lineage stays bounded: `next` is still eagerly pinned each round.
-      val afterLarge = sym.where(col("_v_") > col("_u_"))
-        .join(mins, "_u_")
-        .select(col("_v_").as("_hi_"), col("_m_").as("_lo_"))
-        .distinct().persist()
+      // a re-pointed edge (m < u) moved. Deduplicated and cached hash-
+      // partitioned on _hi_, so the small-star's min and join read it in
+      // place (a checkpoint's scan would report unknown partitioning)
+      val l = sym.where(col("_v_") > col("_u_")).join(mins, "_u_")
+        .select(col("_v_").as("_hi_"), col("_m_").as("_lo_"),
+          (col("_m_") < col("_u_")).as("_chg_"))
+        .repartition(col("_hi_"))
+        .groupBy("_hi_", "_lo_").agg(max(col("_chg_")).as("_chg_")).persist()
+      large = Some(l)
       // small-star: canonical (hi, lo) IS the smaller-neighbor adjacency
       // Γ⁻(hi); m⁻ = min Γ⁻(u) (< u, so the least() with u is implicit);
-      // u and every non-min smaller neighbor re-point to m⁻
-      val minsSmall = afterLarge.groupBy("_hi_").agg(min(col("_lo_")).as("_m_"))
-      val nextPlan = afterLarge.join(minsSmall, "_hi_")
-        .where(col("_lo_") =!= col("_m_"))
-        .select(col("_lo_").as("_hi_"), col("_m_").as("_lo_"))
-        .union(minsSmall.select(col("_hi_"), col("_m_")))
-        .distinct()
-      // plan-audit hook (r20): see connectedComponents
-      if (iter == 0 && pairs.sparkSession.conf
-          .get("spark.graft.explainRounds", "false").toBoolean)
-        nextPlan.explain("formatted")
-      val next = nextPlan.materializeRound()
-      val nNext = next.count()
-      afterLarge.unpersist()
-      // exact fixpoint test on two distinct sets: equal counts + empty
-      // difference (ids-only jobs over a set shrinking toward one edge
-      // per non-min node)
-      converged = nNext == nE &&
-        next.exceptAll(edges).limit(1).count() == 0
-      // superseded round state must not pile up across rounds (r20): the
-      // final labels read only the LAST edge set, so the previous round's
-      // pin can drop as soon as the fixpoint test has read it
-      if (edges ne next) edges.unpersist()
-      edges = next
-      nE = nNext
-      iter += 1
-    }
-    require(converged, s"connectedComponentsStar: no fixpoint after $maxIter " +
-      "rounds (pathological input — raise maxIter)")
+      // u and every non-min smaller neighbor re-point to m⁻, and such a
+      // re-pointed edge moved
+      val minsSmall = l.groupBy("_hi_")
+        .agg(min(col("_lo_")).as("_m_"), max(col("_chg_")).as("_chg_"))
+      l.join(minsSmall, "_hi_").where(col("_lo_") =!= col("_m_"))
+        .select(col("_lo_").as("_hi_"), col("_m_").as("_lo_"), lit(true).as("_chg_"))
+        .union(minsSmall)
+        .groupBy("_hi_", "_lo_").agg(max(col("_chg_")).as("_chg_"))
+    } finally large.foreach(_.unpersist())
     // the composite fixpoint is a star forest by Kiveris et al.'s
     // convergence theorem; assert the depth-1 property (no root is also a
     // member) so a latent violation fails loudly instead of mislabeling
@@ -498,7 +460,7 @@ object Dedup {
     // stars are (member, min). Minima have no outgoing edge and isolated
     // nodes (self-pairs in the input) have none either — restore both
     // from the node set with component = self.
-    nodes
+    canon.select(col("_hi_").as("id")).union(canon.select(col("_lo_"))).distinct()
       .join(edges.select(col("_hi_").as("id"), col("_lo_").as("component")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
@@ -893,42 +855,6 @@ object Dedup {
   // Exact n-gram Jaccard
   // ---------------------------------------------------------------------
 
-  /** Exact Jaccard similarity over distinct word n-grams, >= minJaccard,
-    * via prefix filtering (AllPairs/PPJoin, Bayardo et al. '07 — public
-    * algorithm): order each doc's grams by ascending global frequency and
-    * emit only the first `|d| - ceil(t*|d|) + 1` as join keys — any pair
-    * with Jaccard >= t must share a prefix gram, so the candidate join
-    * fans out on RARE grams only. Candidates are then verified exactly by
-    * intersecting the full sorted gram arrays. Output identical to the
-    * naive all-grams join, at a fraction of the shuffle volume — this is
-    * what keeps the op viable when the corpus no longer fits a broadcast.
-    *
-    * Grams are xxhash64-hashed to longs immediately after the distinct:
-    * every downstream stage (df window sort, prefix join keys, the
-    * verify-stage array intersection) then moves and compares 8-byte
-    * longs instead of ~(6·n)-char strings — at sf0.1 this roughly halved
-    * the op's wall time, and at corpus scale it shrinks the gram-keyed
-    * shuffle by ~5x. Jaccard over hashed distinct grams equals Jaccard
-    * over the string grams unless two distinct grams of the same doc
-    * pair collide in 64 bits (P < 1e-11 per corpus at 1e6 distinct
-    * grams) — the same collision tolerance every MinHash/SimHash tier
-    * here already accepts, except this op stays EXACT in expectation
-    * (a collision can only perturb one pair's count by 1, not bias the
-    * whole estimator).
-    *
-    * Two more AllPairs/PPJoin refinements run at candidate generation,
-    * BEFORE the pair-distinct shuffle, so pruned pairs never shuffle:
-    * the length filter (|a| and |b| compatible: t·max <= min) and the
-    * positional filter — for a shared gram at sorted positions (pa, pb)
-    * the true overlap i is bounded by min(pa,pb)-1 + 1 + min(na-pa,
-    * nb-pb) (grams strictly before the match on BOTH sides can
-    * contribute at most min(pa,pb)-1; strictly after, at most
-    * min(na-pa, nb-pb)), and i >= ceil(t·(na+nb)/(1+t)) is necessary
-    * for jaccard >= t. A row failing the bound proves i < i_min for the
-    * whole pair, and a true pair can never have ALL its shared rows
-    * fail (each row's bound majorizes the true overlap), so keeping
-    * rows that pass and distinct-ing afterwards is recall-safe.
-    */
   /** The docs/prefix pipeline shared by [[ngramJaccardPairs]] and
     * [[ngramCandidateVolume]] — factoring it keeps the guard's measured
     * statistic aligned with the operator's actual prefix logic by
@@ -1040,7 +966,43 @@ object Dedup {
     else math.max(2L, (maxGramDfRatio * df.count()).toLong)
   }
 
-  /** `maxGramDfRatio` (round 19 — the r18 verdict's stretch item) opens a
+  /** Exact Jaccard similarity over distinct word n-grams, >= minJaccard,
+    * via prefix filtering (AllPairs/PPJoin, Bayardo et al. '07 — public
+    * algorithm): order each doc's grams by ascending global frequency and
+    * emit only the first `|d| - ceil(t*|d|) + 1` as join keys — any pair
+    * with Jaccard >= t must share a prefix gram, so the candidate join
+    * fans out on RARE grams only. Candidates are then verified exactly by
+    * intersecting the full sorted gram arrays. Output identical to the
+    * naive all-grams join, at a fraction of the shuffle volume — this is
+    * what keeps the op viable when the corpus no longer fits a broadcast.
+    *
+    * Grams are xxhash64-hashed to longs immediately after the distinct:
+    * every downstream stage (df window sort, prefix join keys, the
+    * verify-stage array intersection) then moves and compares 8-byte
+    * longs instead of ~(6·n)-char strings — at sf0.1 this roughly halved
+    * the op's wall time, and at corpus scale it shrinks the gram-keyed
+    * shuffle by ~5x. Jaccard over hashed distinct grams equals Jaccard
+    * over the string grams unless two distinct grams of the same doc
+    * pair collide in 64 bits (P < 1e-11 per corpus at 1e6 distinct
+    * grams) — the same collision tolerance every MinHash/SimHash tier
+    * here already accepts, except this op stays EXACT in expectation
+    * (a collision can only perturb one pair's count by 1, not bias the
+    * whole estimator).
+    *
+    * Two more AllPairs/PPJoin refinements run at candidate generation,
+    * BEFORE the pair-distinct shuffle, so pruned pairs never shuffle:
+    * the length filter (|a| and |b| compatible: t·max <= min) and the
+    * positional filter — for a shared gram at sorted positions (pa, pb)
+    * the true overlap i is bounded by min(pa,pb)-1 + 1 + min(na-pa,
+    * nb-pb) (grams strictly before the match on BOTH sides can
+    * contribute at most min(pa,pb)-1; strictly after, at most
+    * min(na-pa, nb-pb)), and i >= ceil(t·(na+nb)/(1+t)) is necessary
+    * for jaccard >= t. A row failing the bound proves i < i_min for the
+    * whole pair, and a true pair can never have ALL its shared rows
+    * fail (each row's bound majorizes the true overlap), so keeping
+    * rows that pass and distinct-ing afterwards is recall-safe.
+    *
+    * `maxGramDfRatio` opens a
     * DISCLOSED-RECALL scale lane past the candidate guard: grams held by
     * more than `ratio × |docs|` documents are pruned from the candidate
     * keys (the capped lane's prefix is the full RARE-gram set) but NOT

@@ -22,12 +22,13 @@ import graft.operators.Materialize.MaterializeOps
   * Scale shape: each iteration is one equi-join of edges to the current
   * ranks (shuffle on src), one aggregate (shuffle on dst), one left join
   * back to the node set — all key-partitioned, no broadcast of anything
-  * that grows with the graph. The plan is materialized per round via
-  * [[Materialize.round]] (same discipline as
-  * [[Dedup.connectedComponents]]) so iteration depth never compounds into
-  * Catalyst plan blowup — `localCheckpoint` locally, reliable
-  * `checkpoint()` when the session has a checkpoint dir (see
-  * [[Materialize]] for the executor-loss tradeoff at cluster scale).
+  * that grows with the graph. Every iterative measure here runs on
+  * [[Materialize.iterate]], the one superstep loop (shared with
+  * [[Dedup.connectedComponents]]), which pins the round state so
+  * iteration depth never compounds into Catalyst plan blowup —
+  * `localCheckpoint` locally, reliable `checkpoint()` when the session
+  * has a checkpoint dir (see [[Materialize]] for the executor-loss
+  * tradeoff at cluster scale).
   */
 object Graph {
 
@@ -93,52 +94,36 @@ object Graph {
     // per-node initial mass and restart base: uniform in the classic
     // form; concentrated on the (graph-restricted) seed set when
     // personalized — non-seeds start and restart at zero
-    val nodesWB = teleport match {
-      case None =>
-        val init = scale / n
-        val base = ((dampDen - dampNum) * init) / dampDen
-        nodes.withColumn("_init_", lit(init)).withColumn("_base_", lit(base))
-      case Some(t) =>
-        val seeds = t.select(col(t.columns.head).cast("long").as("node_id"))
-          .distinct().join(nodes, "node_id").materializeRound()
-        val s = seeds.count()
-        require(s > 0, "personalized pageRank: no teleport seed is in the graph")
-        val initS = scale / s
-        val baseS = ((dampDen - dampNum) * initS) / dampDen
-        nodes.join(seeds.withColumn("_isSeed_", lit(1)), Seq("node_id"), "left")
-          .select(col("node_id"),
-            when(col("_isSeed_").isNotNull, lit(initS)).otherwise(lit(0L))
-              .as("_init_"),
-            when(col("_isSeed_").isNotNull, lit(baseS)).otherwise(lit(0L))
-              .as("_base_"))
+    val seeds = teleport.map(t => t.select(col(t.columns.head).cast("long")
+      .as("node_id")).distinct().join(nodes, "node_id").materializeRound())
+    val s = seeds.fold(n)(_.count())
+    require(s > 0, "personalized pageRank: no teleport seed is in the graph")
+    val init = scale / s
+    val base = ((dampDen - dampNum) * init) / dampDen
+    val nodesWB = seeds match {
+      case None => nodes.select(col("node_id"), lit(init).as("_init_"), lit(base).as("_base_"))
+      case Some(sd) =>
+        val w = when(col("_isSeed_").isNotNull, 1L).otherwise(0L)
+        nodes.join(sd.withColumn("_isSeed_", lit(1)), Seq("node_id"), "left")
+          .select(col("node_id"), (w * init).as("_init_"), (w * base).as("_base_"))
           .materializeRound()
     }
     val deg = e.groupBy("_src_").agg(count(lit(1)).as("_deg_"))
-    // repartitioned on the join key so each round's rank join reuses the
-    // cached layout instead of re-exchanging the edge side every time
-    val edgesWithDeg = e.join(deg, "_src_")
-      .repartition(col("_src_")).materializeRound()
-    var ranks = nodesWB.select(col("node_id"), col("_init_").as("rank"))
-    for (i <- 1 to iterations) {
+    // repartitioned on the join key and cached, so each round's rank join
+    // reads the edge side in place: a checkpoint would not do, as under
+    // AQE its scan reports unknown partitioning. The first round fills it.
+    val edgesWithDeg = e.join(deg, "_src_").repartition(col("_src_")).persist()
+    try Materialize.iterate("pageRank",
+        nodesWB.select(col("node_id"), col("_init_").as("rank")),
+        iterations) { (ranks, _, _) =>
       val contrib = edgesWithDeg
         .join(ranks, col("_src_") === col("node_id"))
-        .select(col("_dst_").as("node_id"),
-          expr("rank div _deg_").as("_c_"))
+        .select(col("_dst_").as("node_id"), expr("rank div _deg_").as("_c_"))
         .groupBy("node_id").agg(sum(col("_c_")).as("_in_"))
-      ranks = nodesWB.join(contrib, Seq("node_id"), "left")
-        .select(col("node_id"),
-          (col("_base_") +
-            expr(s"($dampNum * coalesce(_in_, 0L)) div $dampDen"))
-            .as("rank"))
-      // r20: pin every SECOND round (and the last) instead of every round.
-      // A round's rank frame has exactly one consumer (the next round's
-      // contrib join), so two rounds compose into one job with bounded
-      // plan depth — identical integer results, half the materialization
-      // barriers (each is a full barrier + a node-sized state write; on
-      // the reliable lane, an FS round-trip per pin).
-      if (i % 2 == 0 || i == iterations) ranks = ranks.materializeRound()
-    }
-    ranks
+      nodesWB.join(contrib, Seq("node_id"), "left")
+        .select(col("node_id"), (col("_base_") +
+          expr(s"($dampNum * coalesce(_in_, 0L)) div $dampDen")).as("rank"))
+    } finally edgesWithDeg.unpersist()
   }
 
   /** Degree summary per node over a directed edge list: out-degree,
@@ -174,9 +159,9 @@ object Graph {
     * graph), aggregates the per-neighbor loss, and subtracts it from the
     * surviving degree rows. The fixpoint is order-independent (the
     * k-core is unique), so synchronous rounds are deterministic on any
-    * engine/partitioning; `localCheckpoint` on the node-sized table per
-    * round bounds plan depth (the [[pageRankInt]] discipline). Rounds
-    * needed = the peeling depth of the graph. `maxRounds` caps the loop
+    * engine/partitioning; pinning the node-sized table per round bounds
+    * plan depth, and the frontier size rides that pin as the halt count.
+    * Rounds needed = the peeling depth of the graph. `maxRounds` caps the loop
     * and `require`s convergence — an unconverged cut is a wrong answer,
     * not a best effort.
     *
@@ -190,97 +175,93 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Long,
             maxRounds: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val undirected = edges
-      .select(col(srcCol).cast("long").as("_a_"),
-        col(dstCol).cast("long").as("_b_"))
-      .where(col("_a_") =!= col("_b_"))
-    // repartition on the per-round join key BEFORE the one-time
-    // checkpoint: the checkpointed RDD keeps its hash partitioning, so
-    // every round's frontier join shuffles only the (small) frontier side
-    val kCoreDebug = sys.env.contains("GRAFT_KCORE_DEBUG")
-    val tLive = if (kCoreDebug) System.nanoTime() else 0L
-    // symmetrize by EXPLODE, not a union of the input with itself — a
-    // union would execute the (possibly expensive) upstream edge plan
-    // twice; the explode emits both directions in one pass
-    val live = undirected
-      .select(explode(array(
-        struct(col("_a_"), col("_b_")),
-        struct(col("_b_").as("_a_"), col("_a_").as("_b_")))).as("_e_"))
-      .select(col("_e_._a_").as("_a_"), col("_e_._b_").as("_b_"))
-      // repartition FIRST: HashPartitioning(_a_) satisfies the (_a_,_b_)
-      // clustering the distinct needs (same pair -> same _a_ -> same
-      // partition), so the dedup aggregate runs partition-local and the
-      // build pays ONE full-edge shuffle instead of two — and the
-      // aggregate preserves the _a_ partitioning the per-round frontier
-      // join relies on
-      .repartition(col("_a_"))
-      .distinct()
-      .materializeRound()
-    if (kCoreDebug)
-      println(f"[kcore] live build ${(System.nanoTime() - tLive) / 1e9}%.3f s")
-    // ONE job per round: the frontier size rides the SAME materialization
-    // that checkpoints the round's degree table, as an `observe` metric —
-    // no separate count() action. The observation is published by the
-    // checkpoint's listener asynchronously; the bounded wait below covers
-    // the publish race, and a count() fallback keeps correctness even if
-    // a runtime ever stopped routing checkpoints through listeners.
-    def checkpointCountingFrontier(d: DataFrame): (DataFrame, Long) = {
-      val t0 = if (kCoreDebug) System.nanoTime() else 0L
-      val obs = org.apache.spark.sql.Observation()
-      val dd = d
-        .observe(obs, count(when(col("_deg_") < k, 1L)).as("_f_"))
-        .materializeRound()
-      // the wait is configurable because 5 s can be tight under heavy GC
-      // at scale; and ANY observation failure (timeout, failed future,
-      // interrupt) falls back to the count() — the checkpointed data is
-      // fine either way, so only the fused-count optimization is lost
-      val waitSec =
-        sys.env.get("GRAFT_KCORE_OBSERVE_WAIT_SEC").map(_.toLong).getOrElse(5L)
-      val cnt =
-        try scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration(waitSec, "s"))
-          .getLong(0)
-        catch { case scala.util.control.NonFatal(e) =>
-          if (kCoreDebug) println(s"[kcore] observation FAILED: $e")
-          dd.where(col("_deg_") < k).count()
-        }
-      if (kCoreDebug)
-        println(f"[kcore] round job ${(System.nanoTime() - t0) / 1e9}%.3f s frontier=$cnt")
-      (dd, cnt)
-    }
-    var (deg, frontierCount) = checkpointCountingFrontier(
-      live.groupBy("_a_").agg(count(lit(1)).as("_deg_")))
-    var round = 0
-    while (frontierCount > 0 && round < maxRounds) {
-      round += 1
-      // the frontier's exact size is ALREADY KNOWN (observed by the job
-      // that built this round's deg), so the broadcast decision is
-      // runtime-informed and bounded: ≤1M ids (~8 MB) broadcasts — the
-      // common case after round 1 — keeping the live join partition-local
-      // with no frontier exchange; a bigger frontier stays on the
-      // shuffle path (a round-1 frontier at 100 TB can be half the graph)
-      val frontier0 = deg.where(col("_deg_") < k).select("_a_")
-      val frontier =
-        if (frontierCount <= (1L << 20)) broadcast(frontier0) else frontier0
+    // pinned, not cached: the frontier join mostly broadcasts its small
+    // side, so the adjacency's layout rarely matters here
+    val adj = undirected(edges, srcCol, dstCol).materializeRound()
+    // the frontier (sub-k rows) is the halt count, observed on the pin
+    Materialize.iterate("kCore",
+        adj.groupBy("_a_").agg(count(lit(1)).as("_deg_")), maxRounds,
+        Some(_ => col("_deg_") < k)) { (deg, _, frontierCount) =>
+      // the observed frontier size is a bounded broadcast hint: ≤1M ids
+      // (~8 MB) broadcasts — the common case after round 1 — keeping the
+      // adjacency join partition-local with no frontier exchange; a
+      // bigger frontier stays on the shuffle path (a round-1 frontier at
+      // 100 TB can be half the graph)
+      val sub = deg.where(col("_deg_") < k).select("_a_")
+      val frontier = if (frontierCount <= (1L << 20)) broadcast(sub) else sub
       // each dropped node's edges subtract one from each neighbor; edges
-      // between two dropped nodes subtract from rows the anti-join
+      // between two dropped nodes subtract from rows the filter below
       // removes anyway, so no double-count is possible
-      val delta = live.join(frontier, "_a_")
+      val delta = adj.join(frontier, "_a_")
         .groupBy(col("_b_").as("_a_")).agg(count(lit(1)).as("_d_"))
-      // survivors = deg rows NOT in the frontier; the frontier is exactly
-      // the sub-k rows of deg, so the anti-join is a plain filter — one
-      // join fewer per round
-      val (d2, c2) = checkpointCountingFrontier(
-        deg.where(col("_deg_") >= k)
-          .join(delta, Seq("_a_"), "left")
-          .select(col("_a_"),
-            (col("_deg_") - coalesce(col("_d_"), lit(0L))).as("_deg_")))
-      deg = d2
-      frontierCount = c2
-    }
-    require(frontierCount == 0,
-      s"kCore did not converge in $maxRounds rounds")
-    deg.select(col("_a_").as("node_id"), col("_deg_").as("core_degree"))
+      // survivors = deg rows NOT in the frontier: a plain filter
+      deg.where(col("_deg_") >= k).join(delta, Seq("_a_"), "left")
+        .select(col("_a_"),
+          (col("_deg_") - coalesce(col("_d_"), lit(0L))).as("_deg_"))
+    }.select(col("_a_").as("node_id"), col("_deg_").as("core_degree"))
+  }
+
+  /** The undirected reading of a directed edge list as long `(_a_, _b_)`
+    * rows: both directions of every edge, self-loops dropped,
+    * deduplicated, hash-partitioned on `_a_` so a join on `_a_` shuffles
+    * only its other side once the caller caches it (under AQE a
+    * checkpoint's scan reports unknown partitioning). Symmetrized by EXPLODE,
+    * not a union of the input with itself, which would execute the
+    * (possibly expensive) upstream edge plan twice; repartitioned FIRST,
+    * because HashPartitioning(_a_) satisfies the (_a_, _b_) clustering
+    * the distinct needs, so the dedup runs partition-local and the build
+    * pays one full-edge shuffle instead of two. */
+  private def undirected(edges: DataFrame, srcCol: String,
+                         dstCol: String): DataFrame = {
+    val (a, b) = (col(srcCol).cast("long"), col(dstCol).cast("long"))
+    edges.where(a =!= b)
+      .select(explode(array(struct(a.as("_a_"), b.as("_b_")),
+        struct(b.as("_a_"), a.as("_b_")))).as("_e_"))
+      .select(col("_e_._a_").as("_a_"), col("_e_._b_").as("_b_"))
+      .repartition(col("_a_")).distinct()
+  }
+
+  /** Community detection by synchronous label propagation (Raghavan et
+    * al. 2007, public): every node starts labeled with its own id; each
+    * round it adopts the label carried by the PLURALITY of its neighbors,
+    * ties broken by the smallest label — which makes every round a pure
+    * function of the previous labeling, so a fixed iteration count is
+    * deterministic on any engine, any partitioning, any retry (the same
+    * property the integer PageRank buys with fixed-point sums; here votes
+    * are already integers). Communities ≈ trade/link clusters — the
+    * coarse structure a curation run balances sampling across, where
+    * [[Dedup.connectedComponents]] only separates disconnected islands.
+    *
+    * Input edges are symmetrized and deduplicated (undirected reading,
+    * self-loops dropped): each undirected edge votes once in each
+    * direction. Every node of the edge list has ≥ 1 neighbor by
+    * construction, so each round relabels every node.
+    *
+    * Plan per round: one equi-join of the (cached, pre-partitioned)
+    * edge list to current labels, one (node, label) count aggregate, one
+    * per-node argmax window on the vote table — all shuffles keyed on
+    * node id; the window partitions by node over ≤ degree rows, never a
+    * global sort. Pinning every second round caps plan depth, the same
+    * discipline as [[pageRankInt]]. Synchronous LPA can oscillate on
+    * bipartite structure — callers pick `iterations` as a view, not a
+    * fixpoint promise. Returns (node_id, label) after `iterations`
+    * rounds. */
+  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
+                       iterations: Int): DataFrame = {
+    require(iterations >= 0, s"iterations must be >= 0, got $iterations")
+    val sym = undirected(edges, srcCol, dstCol).persist()
+    val byVotes = Window.partitionBy("node_id").orderBy(col("_n_").desc, col("label"))
+    try Materialize.iterate("labelPropagation",
+        sym.select(col("_a_").as("node_id")).distinct()
+          .withColumn("label", col("node_id")),
+        iterations) { (labels, _, _) =>
+      sym.join(labels, sym("_a_") === labels("node_id"))
+        .groupBy(col("_b_").as("node_id"), col("label"))
+        .agg(count(lit(1)).as("_n_"))
+        .withColumn("_rn_", row_number().over(byVotes))
+        .where(col("_rn_") === 1)
+        .select(col("node_id"), col("label"))
+    } finally sym.unpersist()
   }
 
   /** Per-node triangle count + local clustering coefficient over an
@@ -308,65 +289,6 @@ object Graph {
     *
     * Returns (node_id, degree, triangles, clustering) for every node of
     * the canonical graph. */
-  /** Community detection by synchronous label propagation (Raghavan et
-    * al. 2007, public): every node starts labeled with its own id; each
-    * round it adopts the label carried by the PLURALITY of its neighbors,
-    * ties broken by the smallest label — which makes every round a pure
-    * function of the previous labeling, so a fixed iteration count is
-    * deterministic on any engine, any partitioning, any retry (the same
-    * property the integer PageRank buys with fixed-point sums; here votes
-    * are already integers). Communities ≈ trade/link clusters — the
-    * coarse structure a curation run balances sampling across, where
-    * [[Dedup.connectedComponents]] only separates disconnected islands.
-    *
-    * Input edges are symmetrized and deduplicated (undirected reading,
-    * self-loops dropped): each undirected edge votes once in each
-    * direction. Every node of the edge list has ≥ 1 neighbor by
-    * construction, so each round relabels every node.
-    *
-    * Plan per round: one equi-join of the (checkpointed, pre-partitioned)
-    * edge list to current labels, one (node, label) count aggregate, one
-    * per-node argmax window on the vote table — all shuffles keyed on
-    * node id; the window partitions by node over ≤ degree rows, never a
-    * global sort. `localCheckpoint` per round caps plan depth, the same
-    * discipline as [[pageRankInt]]. Synchronous LPA can oscillate on
-    * bipartite structure — callers pick `iterations` as a view, not a
-    * fixpoint promise. Returns (node_id, label) after `iterations`
-    * rounds. */
-  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int): DataFrame = {
-    require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val undirected = edges
-      .select(col(srcCol).cast("long").as("_a_"),
-        col(dstCol).cast("long").as("_b_"))
-      .where(col("_a_") =!= col("_b_"))
-    val sym = undirected
-      .union(undirected.select(col("_b_").as("_a_"), col("_a_").as("_b_")))
-      .distinct()
-      .repartition(col("_a_"))
-      .materializeRound()
-    var labels = sym.select(col("_a_").as("node_id"))
-      .distinct()
-      .withColumn("label", col("node_id"))
-      .materializeRound()
-    for (i <- 1 to iterations) {
-      val votes = sym
-        .join(labels, sym("_a_") === labels("node_id"))
-        .groupBy(col("_b_").as("node_id"), col("label"))
-        .agg(count(lit(1)).as("_n_"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("node_id").orderBy(col("_n_").desc, col("label"))
-      labels = votes
-        .withColumn("_rn_", row_number().over(w))
-        .where(col("_rn_") === 1)
-        .select(col("node_id"), col("label"))
-      // r20: pin every second round (and the last) — one consumer per
-      // round (the next vote join), see pageRankIntFrom
-      if (i % 2 == 0 || i == iterations) labels = labels.materializeRound()
-    }
-    labels
-  }
-
   def triangleStats(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
     val canon = edges
@@ -427,14 +349,15 @@ object Graph {
     * companion to [[personalizedPageRankInt]]'s proximity mass).
     *
     * Synchronous frontier expansion: round i joins the CURRENT FRONTIER
-    * (nodes first reached at distance i) to the edge list and min-merges
+    * (the nodes at distance i − 1, which are exactly the nodes first
+    * reached in the previous round) to the edge list and min-merges
     * the results into the distance table, so each round is one
     * src-keyed equi-join plus one node-keyed aggregate — both
     * key-partitioned shuffles, nothing driver-sized. Joining only the
     * frontier (not the whole distance table) keeps round cost
     * proportional to the expanding wave, and the distance table is
-    * `localCheckpoint`ed per round so plan depth never compounds (the
-    * [[Dedup.connectedComponents]] discipline). Integer hop counts make
+    * pinned per round so plan depth never compounds; the size of the new
+    * frontier rides that pin as the halt count. Integer hop counts make
     * every round replayable bit-identically by an unrolled SQL oracle.
     *
     * `seeds` is one id column; seeds keep distance 0 even if absent from
@@ -445,26 +368,17 @@ object Graph {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = edges.select(col(srcCol).as("_src_"), col(dstCol).as("_dst_"))
       .distinct().materializeRound()
-    var dist = seeds.select(seeds.columns.head).toDF("node_id").distinct()
-      .select(col("node_id"), lit(0L).as("dist")).materializeRound()
-    var frontier = dist
-    var hop = 0
-    while (hop < maxHops) {
-      hop += 1
-      val next = frontier
-        .join(e, frontier("node_id") === e("_src_"))
+    val seed = seeds.select(seeds.columns.head).toDF("node_id").distinct()
+      .select(col("node_id"), lit(0L).as("dist"))
+    // every node at dist < hop was reached before round hop, so the nodes
+    // first reached in round hop are exactly those at dist == hop
+    Materialize.iterate("bfsDistances", seed, maxHops,
+        Some(hop => col("dist") === hop), bounded = true) { (dist, hop, _) =>
+      val next = dist.where(col("dist") === hop - 1)
+        .join(e, col("node_id") === col("_src_"))
         .select(col("_dst_").as("node_id"), lit(hop.toLong).as("dist"))
-      val merged = dist.unionByName(next)
-        .groupBy("node_id").agg(min(col("dist")).as("dist"))
-        .materializeRound()
-      // next round's frontier = nodes first reached THIS round
-      frontier = merged.join(dist.select(col("node_id").as("_seen_")),
-          merged("node_id") === col("_seen_"), "left_anti")
-        .materializeRound()
-      dist = merged
-      if (frontier.isEmpty) hop = maxHops // converged: stop early
+      dist.unionByName(next).groupBy("node_id").agg(min(col("dist")).as("dist"))
     }
-    dist
   }
 
   /** Weighted shortest paths by synchronous Bellman–Ford rounds: after
@@ -477,8 +391,8 @@ object Graph {
     *
     * Each round relaxes the WHOLE distance table against the edge list —
     * one src-keyed equi-join + one node-keyed min aggregate, both
-    * key-partitioned shuffles, `localCheckpoint` per round (the
-    * [[bfsDistances]] discipline; re-relaxing settled nodes only re-emits
+    * key-partitioned shuffles, pinned every second round (the
+    * [[pageRankInt]] discipline; re-relaxing settled nodes only re-emits
     * dominated candidates that min() discards, and unlike BFS a settled
     * node CAN improve later, so no frontier pruning). Negative weights
     * are allowed (the bounded-hop semantics is still exact); unreachable
@@ -490,16 +404,13 @@ object Graph {
         col(weightCol).cast("long").as("_w_"))
       .groupBy("_src_", "_dst_").agg(min(col("_w_")).as("_w_"))
       .materializeRound()
-    var dist = seeds.select(seeds.columns.head).toDF("node_id").distinct()
-      .select(col("node_id"), lit(0L).as("dist")).materializeRound()
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(e, dist("node_id") === e("_src_"))
+    val seed = seeds.select(seeds.columns.head).toDF("node_id").distinct()
+      .select(col("node_id"), lit(0L).as("dist"))
+    Materialize.iterate("ssspInt", seed, rounds) { (dist, _, _) =>
+      val relaxed = e.join(dist, e("_src_") === dist("node_id"))
         .select(col("_dst_").as("node_id"), (col("dist") + col("_w_")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node_id").agg(min(col("dist")).as("dist"))
-        .materializeRound()
+      dist.unionByName(relaxed).groupBy("node_id").agg(min(col("dist")).as("dist"))
     }
-    dist
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) after `iterations`
@@ -516,8 +427,8 @@ object Graph {
     * graph, which is also where HITS rankings stabilize.
     *
     * Plan: two key-partitioned join+aggregate passes per round over the
-    * edge list (shuffle on dst for h, on src for a), `localCheckpoint`
-    * per round; the max for quantization is one scalar aggregate.
+    * edge list (shuffle on dst for h, on src for a), pinned every second
+    * round; the max for quantization is one scalar aggregate.
     * Output: (node_id, hub, auth, hub_milli, auth_milli) over every
     * node appearing as src or dst. */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
@@ -531,10 +442,10 @@ object Graph {
     // so after `iterations` rounds values fit in a signed 64-bit long only
     // if iterations · log2(maxOut·maxIn) < 63. Failing loudly here beats
     // the silent Long wraparound that would otherwise corrupt rankings.
-    val maxOut = e.groupBy(col("_u_")).agg(count(lit(1)).as("_c_"))
-      .agg(coalesce(max(col("_c_")), lit(1L))).head.getLong(0)
-    val maxIn = e.groupBy(col("_v_")).agg(count(lit(1)).as("_c_"))
-      .agg(coalesce(max(col("_c_")), lit(1L))).head.getLong(0)
+    def maxDeg(end: String) = e.groupBy(end).agg(count(lit(1)).as("_c_"))
+      .agg(coalesce(max(col("_c_")), lit(1L)))
+    val degs = maxDeg("_u_").crossJoin(maxDeg("_v_")).head
+    val (maxOut, maxIn) = (degs.getLong(0), degs.getLong(1))
     val log2Growth =
       math.log(maxOut.toDouble * maxIn.toDouble) / math.log(2.0)
     require(iterations * log2Growth < 63.0,
@@ -544,27 +455,22 @@ object Graph {
         "lower iterations (HITS rankings stabilize in 2-3 rounds)")
     val nodes = e.select(col("_u_").as("node_id"))
       .union(e.select(col("_v_"))).distinct().materializeRound()
-    var auth = nodes.select(col("node_id"), lit(1L).as("a"))
-    var hub = nodes.select(col("node_id"), lit(1L).as("h"))
-    for (i <- 1 to iterations) {
-      // r20: pin every second round (and the last) — hub feeds only the
-      // same round's auth, auth only the next round's hub, so two rounds
-      // compose into one job (see pageRankIntFrom); the final hub/auth
-      // are always pinned before the closing join reads them twice
-      hub = e.join(auth, e("_v_") === auth("node_id"))
-        .groupBy(col("_u_").as("node_id")).agg(sum(col("a")).as("h"))
-        .unionByName(nodes.select(col("node_id"), lit(0L).as("h")))
-        .groupBy("node_id").agg(max(col("h")).as("h")) // sinks keep 0
-      if (i % 2 == 0 || i == iterations) hub = hub.materializeRound()
-      auth = e.join(hub, e("_u_") === hub("node_id"))
-        .groupBy(col("_v_").as("node_id")).agg(sum(col("h")).as("a"))
-        .unionByName(nodes.select(col("node_id"), lit(0L).as("a")))
-        .groupBy("node_id").agg(max(col("a")).as("a"))
-      if (i % 2 == 0 || i == iterations) auth = auth.materializeRound()
+    // one pass: each node's score is the sum over its edges of the other
+    // end's score, 0 for nodes without one
+    def pass(from: DataFrame, at: String, to: String, in: String, out: String) =
+      e.join(from, e(at) === from("node_id"))
+        .groupBy(col(to).as("node_id")).agg(sum(col(in)).as(out))
+        .unionByName(nodes.select(col("node_id"), lit(0L).as(out)))
+        .groupBy("node_id").agg(max(col(out)).as(out))
+    // the state is the hub score, so each round reads its input once;
+    // round 1 starts from all-one authorities
+    val hub = Materialize.iterate("hitsInt",
+        nodes.select(col("node_id"), lit(1L).as("a")), iterations) { (s, r, _) =>
+      pass(if (r == 1) s else pass(s, "_u_", "_v_", "h", "a"), "_v_", "_u_", "a", "h")
     }
-    val maxes = hub.agg(max(col("h")).as("_mh_"))
-      .crossJoin(auth.agg(max(col("a")).as("_ma_")))
-    hub.join(auth, "node_id").crossJoin(broadcast(maxes))
+    val scores = hub.join(pass(hub, "_u_", "_v_", "h", "a"), "node_id")
+    val maxes = scores.agg(max(col("h")).as("_mh_"), max(col("a")).as("_ma_"))
+    scores.crossJoin(broadcast(maxes))
       // milli quantization in DECIMAL(38,0): the iteration guard bounds
       // RAW scores to 63 bits, but 1000*score needs ~10 more — a score
       // that legitimately passes the guard would wrap here (ANSI off)

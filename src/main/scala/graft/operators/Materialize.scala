@@ -1,6 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, when}
 
 /** Pluggable materialization for every lineage-truncating pin in the
   * engine: the iterative operators' per-round state ([[Graph]] fixpoints,
@@ -42,13 +48,13 @@ import org.apache.spark.sql.DataFrame
   * `spark.graft.materializer` (`auto` | `local` | `reliable`) — session
   * confs are settable mid-session and scoped per `SparkSession`, unlike
   * the JVM-global checkpoint dir. Both lanes materialize exactly the same
-  * rows and preserve the physical partitioning of the input plan
-  * (`Dataset.checkpoint` and `localCheckpoint` both yield a `LogicalRDD`
-  * carrying `outputPartitioning`, so pre-partitioned edge lists keep
-  * their one-time-shuffle discipline) — the switch changes WHERE blocks
-  * live, never the data; bit-identity is spec'd on the gr01/dd06
-  * fixtures in Round18Spec (per-lane parity) and extended to one
-  * representative one-shot lane per routed file in Round19Spec.
+  * rows — the switch changes WHERE blocks live, never the data;
+  * bit-identity is spec'd on every [[iterate]] operator in Round18Spec
+  * (per-lane parity) and on one representative one-shot lane per routed
+  * file in Round19Spec. Neither lane keeps the input's partitioning
+  * under adaptive execution (Spark's default): the pinned scan reports
+  * unknown partitioning, so a pre-partitioned input that later joins must
+  * read in place is cached (`persist`) instead, as [[Graph]] does.
   */
 object Materialize {
 
@@ -96,6 +102,57 @@ object Materialize {
       case other => throw new IllegalArgumentException(
         s"$ConfKey must be auto|local|reliable, got '$other'")
     }
+
+  /** How long a halting [[iterate]] loop waits for a pin's observed
+    * metric, which the query listener publishes after the job, before it
+    * counts the pinned state with a job of its own instead. */
+  private val ObserveWait = 5.seconds
+
+  /** The superstep loop of every iterative graph operator, after
+    * Pregelix's driver: `step(state, round, live)` builds round `round`'s
+    * state from the previous one (one `state ⋈ edges → groupBy` dataflow
+    * step); this loop pins it on the configured lane and drops the pin it
+    * supersedes.
+    *
+    * Without `live`, the loop runs exactly `rounds` rounds and pins every
+    * second round and the last: a round's state has one consumer, the
+    * next round, so two rounds compose into one job of bounded plan depth.
+    *
+    * With `live`, the loop pins `init` and every round, and counts the
+    * pinned rows matching `live(round)` with a `Dataset.observe` metric
+    * on the pin's own job; it stops when that count is 0. Observed
+    * metrics are not exactly-once under stage retry, so the count only
+    * decides zero vs non-zero and serves `step` as a performance hint
+    * (its `live` argument); exact counts stay real actions. If the metric
+    * does not arrive, a count() job supplies it. Running out of rounds
+    * before the count reaches 0 fails `require`, unless `bounded`: then
+    * the round cap is part of the answer (a hop limit). */
+  private[operators] def iterate(op: String, init: DataFrame, rounds: Int,
+      live: Option[Int => Column] = None, bounded: Boolean = false)
+      (step: (DataFrame, Int, Long) => DataFrame): DataFrame = {
+    var (state, n, last) = (init, 1L, Option.empty[DataFrame])
+    def keep(df: DataFrame): DataFrame = {
+      val pinned = round(df)
+      // a checkpoint's blocks belong to the RDD behind its LogicalRDD
+      last.foreach(_.queryExecution.logical.collect {
+        case l: LogicalRDD => l.rdd.unpersist(blocking = false) })
+      last = Some(pinned)
+      pinned
+    }
+    def pin(df: DataFrame, r: Int): Unit = live match {
+      case None => state = if (r % 2 == 0 || r == rounds) keep(df) else df
+      case Some(rows) =>
+        val obs = Observation()
+        state = keep(df.observe(obs, count(when(rows(r), 1)).as("_live_")))
+        n = try Await.result(obs.future, ObserveWait).getLong(0)
+          catch { case NonFatal(_) => state.where(rows(r)).count() }
+    }
+    if (live.nonEmpty) pin(init, 0)
+    for (r <- 1 to rounds if n > 0) pin(step(state, r, n), r)
+    require(n == 0 || live.isEmpty || bounded,
+      s"$op: no fixpoint after $rounds rounds; raise its round cap")
+    state
+  }
 
   implicit final class MaterializeOps(private val df: DataFrame)
       extends AnyVal {

@@ -341,10 +341,6 @@ object Packing {
       .select(df.columns.map(col) :+ col(bucketCol): _*)
   }
 
-  /** Two-phase sharded [[packSequences]] — the 100 TB plan promised
-    * there, with IDENTICAL output: a document's (seq_id, seq_offset)
-    * depends only on its global start position, which
-    * [[runningTotalSharded]] reconstructs without a global window. */
   /** Length-bucketed batching — the padding-waste reducer every training
     * dataloader runs: rows bucket by ⌊log2(tokens)⌋ (so batch members are
     * within 2x of each other), and within a bucket consecutive rows (by
@@ -375,6 +371,10 @@ object Packing {
         expr("shiftleft(cast(1 as bigint), cast(bucket + 1 as int))"))
   }
 
+  /** Two-phase sharded [[packSequences]] — the 100 TB plan promised
+    * there, with IDENTICAL output: a document's (seq_id, seq_offset)
+    * depends only on its global start position, which
+    * [[runningTotalSharded]] reconstructs without a global window. */
   def packSequencesSharded(df: DataFrame, idCol: String, tokensCol: String,
                            seqLen: Int, numShards: Int = 32): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")

@@ -161,8 +161,6 @@ object Similarity {
         "rank")
   }
 
-  /** LSH-bucketed ANN top-k. Same output schema as bruteForceTopK; recall
-    * < 1.0 by construction (candidates limited to shared buckets). */
   /** Per-vector LSH table signatures: Rademacher ±1 planes from mix64
     * when `portablePlanes` (identical buckets computable in plain SQL —
     * the oracle-gated mode), seeded-Gaussian planes otherwise. */
@@ -183,6 +181,8 @@ object Similarity {
     })
   }
 
+  /** LSH-bucketed ANN top-k. Same output schema as bruteForceTopK; recall
+    * < 1.0 by construction (candidates limited to shared buckets). */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int, dim: Int, bitsPerTable: Int = 12,
               nTables: Int = 4, seed: Long = 42L,
@@ -515,17 +515,6 @@ object Similarity {
         posexplode(sigUdf(col(vecCol))).as(Seq("_table_", "_bucket_")))
   }
 
-  /** Per-label centroid aggregation over QUANTIZED embeddings — the
-    * distributed E-step of k-means/nearest-class-mean, made engine-exact:
-    * each float component is floored to an integer grid (`floor(e·scale)`),
-    * so the per-(label, dim) sums are integers and immune to the
-    * summation-order nondeterminism that makes raw float group-sums
-    * unreproducible across engines and even across Spark retries.
-    * Output: (label, pos, s, n) — the sufficient statistics; mean = s/n.
-    *
-    * 100 TB shape: one explode + one hash aggregate with map-side partial
-    * sums; the result is (labels × dims) rows — model-sized, not
-    * data-sized. */
   /** Quantize one embedding component to the integer grid, rejecting
     * non-finite (and NULL) components IN-PLAN: Spark's floor(double)
     * silently maps NaN → 0 and +Inf → Long.MaxValue, so one corrupt
@@ -537,6 +526,17 @@ object Similarity {
     Guards.finiteOrRaiseStrict(e, floor(e.cast("double") * scale),
       Guards.nonFiniteMsg(op, "embedding component", e))
 
+  /** Per-label centroid aggregation over QUANTIZED embeddings — the
+    * distributed E-step of k-means/nearest-class-mean, made engine-exact:
+    * each float component is floored to an integer grid (`floor(e·scale)`),
+    * so the per-(label, dim) sums are integers and immune to the
+    * summation-order nondeterminism that makes raw float group-sums
+    * unreproducible across engines and even across Spark retries.
+    * Output: (label, pos, s, n) — the sufficient statistics; mean = s/n.
+    *
+    * 100 TB shape: one explode + one hash aggregate with map-side partial
+    * sums; the result is (labels × dims) rows — model-sized, not
+    * data-sized. */
   def quantizedLabelCentroids(df: DataFrame, vecCol: String,
                               labelCol: String, scale: Int = 1000): DataFrame =
     // widen on (label, vector): label alone has dim-of-classes cardinality

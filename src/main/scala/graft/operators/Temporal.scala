@@ -13,25 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Temporal {
 
-  /** Range (interval) join: every `points` row paired with every
-    * `intervals` row of the same `keyCol` whose half-open window
-    * `[startCol, endCol)` contains the point's `tsCol`.
-    *
-    * Re-expression instead of the naive `l.key = r.key AND ts >= s AND
-    * ts < e` plan: Catalyst executes that as an equi-join on the key that
-    * multiplies every point by the key's WHOLE interval history before
-    * filtering — quadratic per hot key. Here time is tiled into
-    * `bucketWidth`-second cells: each interval explodes to the cells it
-    * overlaps, each point maps to exactly ONE cell, and the join becomes a
-    * plain `(key, cell)` equi-join + residual range filter — the
-    * bucketed-range-join plan Databricks/Trino use. Cost is linear in
-    * points plus (interval length / bucketWidth) replicated interval rows;
-    * pick `bucketWidth` near the typical interval length so the
-    * replication factor stays ~2. A point matches in exactly one cell, so
-    * no post-join dedup is needed.
-    *
-    * Timestamps compare at full precision; only the cell id truncates
-    * (`cast(ts as bigint)` = whole epoch seconds on both engines). */
   /** Guarded cell tiling for the bucketed joins: ONE pathological
     * interval (a 9999-12-31 end-of-time sentinel, a corrupt end) with a
     * small bucketWidth would explode to billions of cells — Spark's
@@ -52,6 +33,25 @@ object Temporal {
             |ELSE sequence($lo, $hi) END""".stripMargin)
   }
 
+  /** Range (interval) join: every `points` row paired with every
+    * `intervals` row of the same `keyCol` whose half-open window
+    * `[startCol, endCol)` contains the point's `tsCol`.
+    *
+    * Re-expression instead of the naive `l.key = r.key AND ts >= s AND
+    * ts < e` plan: Catalyst executes that as an equi-join on the key that
+    * multiplies every point by the key's WHOLE interval history before
+    * filtering — quadratic per hot key. Here time is tiled into
+    * `bucketWidth`-second cells: each interval explodes to the cells it
+    * overlaps, each point maps to exactly ONE cell, and the join becomes a
+    * plain `(key, cell)` equi-join + residual range filter — the
+    * bucketed-range-join plan Databricks/Trino use. Cost is linear in
+    * points plus (interval length / bucketWidth) replicated interval rows;
+    * pick `bucketWidth` near the typical interval length so the
+    * replication factor stays ~2. A point matches in exactly one cell, so
+    * no post-join dedup is needed.
+    *
+    * Timestamps compare at full precision; only the cell id truncates
+    * (`cast(ts as bigint)` = whole epoch seconds on both engines). */
   def rangeJoin(points: DataFrame, intervals: DataFrame, keyCol: String,
                 tsCol: String, startCol: String, endCol: String,
                 bucketWidth: Long,

@@ -14,9 +14,6 @@ import graft.operators.{Dedup, Similarity, TextAnalysis}
   * checks + ScalaTest invariants. */
 object PipelineQueries {
 
-  /** pk01/pk02 share one replay (the sharded path's whole point is
-    * bit-identical output), as do pp01/pp04 — defined once so the gates
-    * can never drift apart. */
   /** Shared dd07/dd08 fixture: corpus = doc_id < 400; the day's ingest =
     * the fresh docs plus re-keyed re-crawls of ten corpus pages and one
     * within-batch duplicate, so both drop paths genuinely fire. */
@@ -56,11 +53,6 @@ object PipelineQueries {
       |SELECT doc_id, n_chars FROM surv WHERE rn = 1
       |ORDER BY doc_id""".stripMargin
 
-  /** bp02/bp03 share the 8-round BPE training replay: per round, pair
-    * counts over adjacent symbols (weighted by word frequency), the
-    * (count DESC, l, r) argmax merge, and a greedy-leftmost re-segment
-    * via the chr(31)-joined fold. Consumers start from `s0` = per-word
-    * char lists and read `s8` (+ `m1`..`m8` for the vocabulary). */
   /** Full near-dup-graph connected-components replay (recursive CTE over
     * the 3-gram Jaccard pair graph). Shared by dd06 (propagation), dd13
     * (star contraction), and dd14 (incremental fold) — one ground truth,
@@ -93,6 +85,11 @@ object PipelineQueries {
       |SELECT id AS doc_id, min(r) AS component, min(r) = id AS keep
       |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin
 
+  /** bp02/bp03 share the 8-round BPE training replay: per round, pair
+    * counts over adjacent symbols (weighted by word frequency), the
+    * (count DESC, l, r) argmax merge, and a greedy-leftmost re-segment
+    * via the chr(31)-joined fold. Consumers start from `s0` = per-word
+    * char lists and read `s8` (+ `m1`..`m8` for the vocabulary). */
   private val BpeRoundsSql = (1 to 8).map { k =>
     s"""p$k AS (
        |  SELECT l, r, sum(f) AS c FROM (
@@ -140,6 +137,9 @@ object PipelineQueries {
       |    CAST(count(*) AS BIGINT) AS n_bigrams
       |  FROM j GROUP BY doc_id)""".stripMargin
 
+  /** pk01/pk02 share one replay (the sharded path's whole point is
+    * bit-identical output), as do pp01/pp04 — defined once so the gates
+    * can never drift apart. */
   private val PackingSql =
     """WITH t AS (
       |  SELECT doc_id,
